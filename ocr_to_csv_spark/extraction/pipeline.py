@@ -31,8 +31,10 @@ import tempfile
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..sources import Catalog
 
 # staging registry: each extract() materializes its segmentation output to
 # a scratch parquet dir; older dirs are removed so long sessions stay
@@ -96,21 +98,16 @@ DATE_REGEX = r"^\d{1,2}/\d{1,2}/(\d{4}|\d{2})$"
 # partition multiplier for the two Python-heavy stages (segment input,
 # cell-level salt): finer tasks shorten the straggler tail a mega
 # document leaves at the end of those stages without inflating the
-# partition count of the cheap assembly-tail exchanges. Default is
-# ADAPTIVE: size those stages to ~8 tasks per core (measured +20%
-# at local[32] with 64 shuffle partitions, where the static default
-# left only 2 coarse tasks per thread and a long straggler tail);
-# the same rule holds on a 1000-executor cluster, where the Python
-# stages want several tasks per core regardless of the global shuffle
-# setting. Set SPARK_GRAFT_PY_STAGE_FACTOR to pin it (the scaling
-# protocol pins it so both parallelism levels run the identical plan).
+# partition count of the cheap assembly-tail exchanges. The rule is
+# adaptive: size those stages to ~8 tasks per core (measured +20% at
+# local[32] with 64 shuffle partitions, where a static factor left only
+# 2 coarse tasks per thread and a long straggler tail); the same rule
+# holds on a 1000-executor cluster, where the Python stages want several
+# tasks per core regardless of the global shuffle setting.
 _PY_STAGE_TASKS_PER_CORE = 8
 
 
 def _py_stage_factor(spark: SparkSession, n_part: int) -> int:
-    env = os.environ.get("SPARK_GRAFT_PY_STAGE_FACTOR")
-    if env:
-        return int(env)
     cores = spark.sparkContext.defaultParallelism
     return max(1, -(-_PY_STAGE_TASKS_PER_CORE * cores // n_part))
 
@@ -441,10 +438,9 @@ def extract(
     documents: DataFrame,
     media: DataFrame,
     aliases: DataFrame,
-    shuffle_partitions: int | None = None,
     _salt_granularity: str = "cell",
 ) -> dict[str, DataFrame]:
-    """Run the full pipeline; returns {'spans', 'rows', 'quarantine'} DataFrames.
+    """Run the full pipeline; returns the spans, rows, quarantine, review frames.
 
     spans: (doc_id, kind, text, media_ref, order) — the per-document ordered
     span sequence (the north_rule invariant surface).
@@ -458,9 +454,7 @@ def extract(
     that, or they fail with FileNotFoundException. All surviving staging
     dirs are removed at interpreter exit.
     """
-    n_part = shuffle_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     py_factor = _py_stage_factor(spark, n_part)
     _sweep_stale_stage_dirs()
 
@@ -778,10 +772,26 @@ def to_csv_strings(rows: DataFrame) -> DataFrame:
     )
 
 
-def write_outputs(result: dict[str, DataFrame], out_dir: str) -> None:
-    """Parquet span/row sinks + per-document CSV directory."""
-    result["spans"].write.mode("overwrite").parquet(os.path.join(out_dir, "extracted"))
-    result["rows"].write.mode("overwrite").parquet(os.path.join(out_dir, "rows"))
-    to_csv_strings(result["rows"]).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "csv")
-    )
+def write_outputs(
+    result: dict[str, DataFrame],
+    out_dir: str,
+    partition: tuple[str, Column] | None = None,
+) -> None:
+    """Commit the five sinks of an ``extract()`` result: ``extracted``,
+    ``rows``, ``csv`` (``to_csv_strings``), ``quarantine``, ``review``.
+    Each is overwritten whole, or, given ``partition=(name, column)``,
+    by dynamic overwrite of the partitions it writes: a re-committed
+    bucket or re-delivered batch replaces its data, never duplicates it."""
+    sinks = {
+        "extracted": result["spans"],
+        "rows": result["rows"],
+        "csv": to_csv_strings(result["rows"]),
+        "quarantine": result["quarantine"],
+        "review": result["review"],
+    }
+    cat = Catalog(result["spans"].sparkSession, out_dir)
+    for name, df in sinks.items():
+        if partition is None:
+            cat.overwrite(df, name)
+        else:
+            cat.overwrite_partitions(df.withColumn(*partition), name, [partition[0]])

@@ -159,7 +159,9 @@ def _fast_ac_table(bits: list[int], vals: list[int]) -> list[int]:
       cls 3 (slow/invalid):      3<<27 | codelen<<21 | sym
         sym == 0 marks an invalid window (no code prefix); a real slow
         entry (codelen + size > 16) keeps its RRRRSSSS symbol and the
-        caller reads the magnitude bits itself."""
+        caller reads the magnitude bits itself. A size-0 symbol other
+        than EOB and ZRL is a slow entry too; the caller reads it as
+        end of block."""
     key = ("ac", tuple(bits), tuple(vals))
     lut = _FAST_TABLE_CACHE.get(key)
     if lut is None:
@@ -175,7 +177,7 @@ def _fast_ac_table(bits: list[int], vals: list[int]) -> list[int]:
                 arr[lo:hi] = (2 << 27) | (length << 21)
             else:
                 run, size = sym >> 4, sym & 0x0F
-                if length + size <= 16:
+                if 0 < size and length + size <= 16:
                     shift = 16 - length - size
                     v = (idx[lo:hi] >> shift) & ((1 << size) - 1)
                     ext = np.where(
@@ -760,10 +762,12 @@ def _decode_segments(
                         if sym == 0:
                             raise ValueError("bad Huffman code")
                         nbits -= (e >> 21) & 63
+                        size = sym & 0x0F
+                        if size == 0:  # R/0 other than ZRL: end of block,
+                            break  # as libjpeg reads it
                         k += sym >> 4
                         if k > 63:
                             raise ValueError("AC index overflow")
-                        size = sym & 0x0F
                         if nbits < size:
                             acc = ((acc << 32) | words[wi]) & M64
                             wi += 1

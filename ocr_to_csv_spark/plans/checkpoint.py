@@ -6,13 +6,15 @@ The reference restarts from scratch on every run (no state anywhere); at
 - documents are hash-partitioned into ``n_buckets`` lineage buckets by
   ``pmod(hash(doc_id), n_buckets)`` — the unit of checkpointing. On a real
   cluster these map to Iceberg partition values of the output tables.
-- each bucket is one independent batch of work: outputs land under
-  ``bucket=<b>/`` (idempotent overwrite per bucket), then a state row
-  ``(run_id, bucket, docs_done, span_count, row_count, status, updated_at)``
-  is appended to the ``run_state`` table. State append happens strictly
-  AFTER the bucket's outputs commit, so a crash between the two re-runs
-  the bucket (at-least-once, idempotent because the bucket dir is
-  overwritten atomically by Spark's commit protocol).
+- each bucket is one independent batch of work: all five sinks of
+  ``pipeline.write_outputs`` land under ``bucket=<b>/`` (idempotent
+  overwrite per bucket), then a state row
+  ``(run_id, bucket, docs_done, span_count, row_count, status, updated_at)``,
+  counted by ``DataFrame.observe`` during the commit, is appended to the
+  ``run_state`` table. State append happens strictly AFTER the bucket's
+  outputs commit, so a crash between the two re-runs the bucket
+  (at-least-once, idempotent because the bucket dirs are overwritten
+  atomically by Spark's commit protocol).
 - resume = anti-join: buckets present in run_state with status='done' for
   this run_id are skipped; everything else re-runs.
 
@@ -27,7 +29,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import Catalog
@@ -114,44 +116,29 @@ def run_extract_checkpointed(
         gdocs = docs.filter(F.col("_bucket").isin(group)).drop("_bucket")
         res = pipeline.extract(spark, gdocs, tabs["media"], tabs["aliases"])
 
-        spans = res["spans"].withColumn(
-            "bucket", bucket_of(F.col("doc_id"), n_buckets)
-        )
-        rows = res["rows"].withColumn(
-            "bucket", bucket_of(F.col("doc_id"), n_buckets)
+        # lineage counts ride on the commit jobs (no job of their own);
+        # each document has exactly one order-0 span
+        bucket = bucket_of(F.col("doc_id"), n_buckets)
+        span_obs, row_obs = Observation(), Observation()
+        res["spans"] = res["spans"].observe(span_obs, *(
+            agg for b in group for agg in (
+                F.count_if(bucket == b).alias(f"spans{b}"),
+                F.count_if((bucket == b) & (F.col("order") == 0)).alias(f"docs{b}"),
+            )
+        ))
+        res["rows"] = res["rows"].observe(
+            row_obs, *(F.count_if(bucket == b).alias(f"rows{b}") for b in group)
         )
         # idempotent per-bucket commit: dynamic partition overwrite replaces
         # exactly the buckets in this group, never earlier ones (Iceberg:
         # overwritePartitions — see sources/catalog.py mapping)
-        cat = Catalog(spark, out_dir)
-        cat.overwrite_partitions(spans, "extracted", ["bucket"])
-        cat.overwrite_partitions(rows, "rows", ["bucket"])
+        pipeline.write_outputs(res, out_dir, partition=("bucket", bucket))
 
-        # lineage metrics per bucket, appended only after outputs committed
-        per_bucket = (
-            spans.groupBy("bucket")
-            .agg(
-                F.countDistinct("doc_id").alias("docs_done"),
-                F.count("*").alias("span_count"),
-            )
-            .join(
-                rows.groupBy("bucket").agg(F.count("*").alias("row_count")),
-                "bucket",
-                "left",
-            )
-        )
+        spans_m, rows_m = span_obs.get, row_obs.get
         now = time.time()
-        present = {r["bucket"]: r for r in per_bucket.collect()}
         state_rows = [
-            (
-                run_id,
-                int(b),
-                int(present[b]["docs_done"]) if b in present else 0,
-                int(present[b]["span_count"]) if b in present else 0,
-                int(present[b]["row_count"] or 0) if b in present else 0,
-                "done",
-                now,
-            )
+            (run_id, b, spans_m[f"docs{b}"], spans_m[f"spans{b}"],
+             rows_m[f"rows{b}"], "done", now)
             for b in group
         ]
         cat_state = Catalog(spark, os.path.dirname(state_dir) or ".")

@@ -84,22 +84,16 @@ class Catalog:
 
     def overwrite_partitions(self, df: DataFrame, name: str, partition_by: list[str]) -> None:
         """Replace only the partitions present in df (idempotent per-bucket
-        commit — Iceberg ``overwritePartitions``). The session-wide
-        ``partitionOverwriteMode`` conf is restored afterwards so later
-        plain ``mode('overwrite')`` writes keep truncate semantics."""
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = self.spark.conf.get(key, None)
-        self.spark.conf.set(key, "dynamic")
-        try:
-            self._save(
-                df.write.mode("overwrite").partitionBy(*partition_by),
-                self.path(name),
-            )
-        finally:
-            if prev is None:
-                self.spark.conf.unset(key)
-            else:
-                self.spark.conf.set(key, prev)
+        commit — Iceberg ``overwritePartitions``). The dynamic mode is a
+        per-write option, so the session conf is never touched and
+        concurrent plain ``mode('overwrite')`` writes keep truncate
+        semantics."""
+        self._save(
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*partition_by),
+            self.path(name),
+        )
 
     def append(self, df: DataFrame, name: str) -> None:
         self._save(df.write.mode("append"), self.path(name))

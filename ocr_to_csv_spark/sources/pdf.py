@@ -150,8 +150,14 @@ def _decode_xobject(body: bytes) -> np.ndarray:
     if m is None:
         raise ValueError("image XObject without stream")
     raw = m.group(1)
+    # a direct /Length is exact; it wins whenever it lands on the stream's
+    # end (an EOL strip alone loses a payload byte that is itself a \r)
+    length = re.search(rb"/Length\s+(\d+)\b(?!\s+\d+\s+R)", body[: m.start()])
+    n = int(length.group(1)) if length else -1
     end = raw.rfind(b"endstream")
-    if end >= 0:
+    if 0 <= n <= len(raw) and raw[n:].lstrip(b"\r\n").startswith(b"endstream"):
+        raw = raw[:n]
+    elif end >= 0:
         raw = raw[:end]
         if raw.endswith(b"\r\n"):
             raw = raw[:-2]

@@ -1,13 +1,15 @@
 """Streaming extraction: ``readStream`` on the documents table →
-``foreachBatch`` running the SAME batch stage functions → append sinks.
+``foreachBatch`` running the SAME batch stage functions and commit path.
 
 Every stage of the pipeline is a stateless per-document map (SURVEY.md
 §1.3), so the batch plan lifts to Structured Streaming unchanged: each
-micro-batch of documents goes through ``pipeline.extract`` and appends to
-the span/row sinks. Exactly-once lands on Spark's streaming checkpoint +
-idempotent parquet/Iceberg appends. Watermarks/session windows are not
-required (no cross-document state in the extraction path; dedup/metrics
-run as periodic batch passes over the sink tables).
+micro-batch goes through ``pipeline.extract`` and ``write_outputs``,
+committing all five sinks under ``batch=<batch_id>``. A re-delivered
+batch overwrites its own partition, so Spark's streaming checkpoint gives
+exactly-once sinks (batch ids restart with a new checkpoint: give it a
+new ``out_dir``). Watermarks/session windows are not required (no
+cross-document state in the extraction path; dedup/metrics run as
+periodic batch passes over the sink tables).
 
 ``trigger(availableNow=True)`` drains the backlog and stops — the test
 mode; a production run would use a processing-time trigger.
@@ -15,7 +17,7 @@ mode; a production run would use a processing-time trigger.
 
 from __future__ import annotations
 
-import os
+from pyspark.sql import functions as F
 
 DOC_SCHEMA = (
     "doc_id string, "
@@ -32,7 +34,7 @@ def stream_extract(
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Drain ``docs_stream_dir`` (directory of documents-parquet files)
-    through the extraction pipeline into append-mode parquet sinks."""
+    through the extraction pipeline into batch-partitioned sinks."""
     from ..extraction import pipeline
 
     tabs = pipeline.load_corpus(spark, corpus_dir)
@@ -45,8 +47,7 @@ def stream_extract(
 
     def process_batch(batch_df, batch_id: int) -> None:
         res = pipeline.extract(batch_df.sparkSession, batch_df, media, aliases)
-        res["spans"].write.mode("append").parquet(os.path.join(out_dir, "extracted"))
-        res["rows"].write.mode("append").parquet(os.path.join(out_dir, "rows"))
+        pipeline.write_outputs(res, out_dir, partition=("batch", F.lit(batch_id)))
 
     q = (
         docs.writeStream.foreachBatch(process_batch)
@@ -181,8 +182,6 @@ def stream_gated_append(
     under the same branch name (the abandoned dir is unreferenced once
     its manifest expires). At 100 TB every step is metadata-sized except
     the one audit aggregate over the new batch."""
-    from pyspark.sql import functions as F
-
     from ..sources.snapshots import SnapshotCatalog
 
     cat = SnapshotCatalog(spark, catalog_base)

@@ -24,6 +24,11 @@ def test_dynamic_partition_overwrite_keeps_other_partitions(spark, tmp_path):
     cat.overwrite_partitions(df1, "t", ["bucket"])
     got = {(r["bucket"], r["v"]) for r in cat.read("t").collect()}
     assert got == {(0, "x0"), (1, "NEW")}
+    # the dynamic mode is a per-write option: the session conf stays
+    # STATIC, so a plain overwrite still truncates the whole table
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "STATIC"
+    cat.overwrite(df1, "t", partition_by=["bucket"])
+    assert {(r["bucket"], r["v"]) for r in cat.read("t").collect()} == {(1, "NEW")}
 
 
 def test_merge_distinct_upserts(spark, tmp_path):

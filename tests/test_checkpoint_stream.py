@@ -4,6 +4,7 @@ import os
 import shutil
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_to_csv_spark.extraction import pipeline
@@ -59,6 +60,93 @@ def test_checkpoint_resume_no_recompute(spark, corpus_dir, tmp_path):
     assert len(m) == 1 and m[0]["status"] == "done"
     assert m[0]["span_count"] == len(got)
     assert m[0]["buckets"] == 8
+
+
+@pytest.fixture(scope="module")
+def junk_corpus(tmp_path_factory):
+    """Twelve generated documents plus one whose only span is an
+    undecodable blob and one holding an unknown span kind. The purpose
+    aliases are withheld, so the purpose cells land in review."""
+    from ocr_to_csv_spark.datagen.gen import gen_corpus
+
+    t = gen_corpus(12, seed=42)
+    docs = pd.concat([t["documents"], pd.DataFrame([
+        {"doc_id": "doc-junk", "spans": [
+            {"kind": "image", "text": None, "media_ref": "junk", "offset": 0}]},
+        {"doc_id": "doc-badkind", "spans": [
+            {"kind": "text", "text": "kept", "media_ref": None, "offset": 0},
+            {"kind": "audio", "text": None, "media_ref": None, "offset": 1}]},
+    ])], ignore_index=True)
+    media = pd.concat([t["media"], pd.DataFrame([
+        {"media_ref": "junk", "content": b"\xff\xd8junk", "width": 0, "height": 0}
+    ])], ignore_index=True)
+    aliases = t["aliases"][t["aliases"]["col"] == 1]
+    d = tmp_path_factory.mktemp("junk_corpus")
+    for name, df in (("documents", docs), ("media", media), ("aliases", aliases)):
+        df.to_parquet(d / f"{name}.parquet", index=False)
+    return str(d)
+
+
+def _sink(spark, out, name):
+    """A committed sink's rows, sorted, without its partition column."""
+    df = spark.read.parquet(os.path.join(out, name))
+    cols = sorted(c for c in df.columns if c not in ("bucket", "batch"))
+    return sorted((tuple(r) for r in df.select(cols).collect()), key=repr)
+
+
+SINKS = ("extracted", "rows", "csv", "quarantine", "review")
+
+
+def test_checkpoint_resume_commits_every_sink(spark, junk_corpus, tmp_path):
+    """A crashed and resumed checkpointed run commits the same five sinks,
+    quarantine and review included, as one uninterrupted run, and its
+    run state counts what it committed."""
+    once = str(tmp_path / "once")
+    tabs = pipeline.load_corpus(spark, junk_corpus)
+    pipeline.write_outputs(
+        pipeline.extract(spark, tabs["documents"], tabs["media"], tabs["aliases"]),
+        once,
+    )
+
+    out = str(tmp_path / "resumed")
+    kw = {"n_buckets": 4, "group_size": 1}
+    crash = cp.run_extract_checkpointed(spark, junk_corpus, out, "j", max_groups=2, **kw)
+    resume = cp.run_extract_checkpointed(spark, junk_corpus, out, "j", **kw)
+    assert crash["processed"] == 2 and resume["skipped"] == 2
+    assert resume["processed"] == 2 and resume["remaining"] == 0
+
+    for name in SINKS:
+        assert _sink(spark, out, name) == _sink(spark, once, name), name
+    quar = _sink(spark, out, "quarantine")
+    assert {(r[0], r[1]) for r in quar} == {
+        ("doc-badkind", "audio"), ("doc-junk", "media_error")}
+    assert _sink(spark, out, "review")
+
+    m = cp.run_metrics(spark, os.path.join(out, "run_state"), "j").collect()
+    spans = _sink(spark, out, "extracted")
+    assert (m[0]["buckets"], m[0]["docs_done"], m[0]["span_count"],
+            m[0]["row_count"]) == (
+        4, len({r[0] for r in spans}), len(spans), len(_sink(spark, out, "rows")))
+
+
+def test_write_outputs_recommit_replaces_partition(spark, junk_corpus, tmp_path):
+    """Committing the same ``batch`` twice (a re-delivered micro-batch)
+    leaves every sink's counts unchanged; a new batch value adds a
+    partition beside it."""
+    tabs = pipeline.load_corpus(spark, junk_corpus)
+    res = pipeline.extract(spark, tabs["documents"], tabs["media"], tabs["aliases"])
+    out = str(tmp_path / "batches")
+
+    def counts():
+        return {n: spark.read.parquet(os.path.join(out, n)).count() for n in SINKS}
+
+    pipeline.write_outputs(res, out, partition=("batch", F.lit(7)))
+    first = counts()
+    assert all(first.values()), first
+    pipeline.write_outputs(res, out, partition=("batch", F.lit(7)))
+    assert counts() == first
+    pipeline.write_outputs(res, out, partition=("batch", F.lit(8)))
+    assert counts() == {n: 2 * c for n, c in first.items()}
 
 
 def test_stream_matches_batch(spark, corpus_dir, tmp_path):

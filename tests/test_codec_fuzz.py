@@ -45,6 +45,19 @@ def test_jpeg_fuzz_corruptions():
     _fuzz(jpeg.encode_gray(_img(), 90), jpeg.decode, 300, seed=2)
 
 
+def test_jpeg_size0_ac_symbol_in_dht():
+    """A DHT listing an AC symbol of size 0 that is neither EOB nor ZRL
+    (0x10 here, in place of the unused 0xFA) still decodes, and the
+    stream stays fuzz-safe."""
+    blob = jpeg.encode_gray(_img(), 90)
+    dht = blob.index(b"\xff\xc4\x00\xb5\x10")  # the AC luma table
+    vals_end = dht + 2 + 0xB5
+    assert blob[vals_end - 1] == 0xFA and 0x10 not in blob[dht + 21 : vals_end]
+    odd = blob[: vals_end - 1] + b"\x10" + blob[vals_end:]
+    assert np.array_equal(jpeg.decode(odd), jpeg.decode(blob))
+    _fuzz(odd, jpeg.decode, 300, seed=2)
+
+
 def test_pdf_fuzz_corruptions():
     blob = pdf.build_pdf([_img(), _img(50, 70)])
     _fuzz(blob, pdf.extract_page_images, 200, seed=3)

@@ -26,6 +26,19 @@ def test_build_extract_roundtrip_exact():
         assert np.array_equal(a, b)
 
 
+def test_flate_stream_ending_in_cr_reads_back():
+    """Document 53 of seed 5 holds a Flate stream whose last byte is
+    ``\r``: the direct /Length keeps it, where stripping the EOL before
+    ``endstream`` cut it off and zlib failed."""
+    from ocr_to_csv_spark.datagen.gen import gen_corpus
+
+    blobs = [bytes(b) for b in gen_corpus(1, 5, start=53)["media"]["content"]]
+    pdfs = [b for b in blobs if b.startswith(b"%PDF")]
+    assert pdfs and any(b"\r\nendstream" in b for b in pdfs)
+    for blob in pdfs:
+        assert pdf.extract_page_images(blob)
+
+
 def test_vector_pdf_raises():
     with pytest.raises(ValueError):
         pdf.extract_page_images(b"%PDF-1.4\n1 0 obj\n<< >>\nendobj\n")

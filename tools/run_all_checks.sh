@@ -6,6 +6,8 @@ echo "== pytest =="
 python -m pytest tests/ -x -q
 echo "== Spark-vs-DuckDB oracle gate (full registry) =="
 CHECK_JSON_OUT="${CHECK_JSON_OUT:-CORRECTNESS_local.json}" python tools/check_queries.py /root/testdata/sf0.01
+echo "== extraction benchmark self-test =="
+python3 perfbench/selftest.py --smoke
 echo "== headline bench =="
 python bench.py
 echo "== packaging =="
